@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -30,10 +33,16 @@ object Bench {
     // two timed runs per query, best-of: first execution pays JIT +
     // codegen compilation that a long-lived cluster amortizes away
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
-    def once(fn: (org.apache.spark.sql.SparkSession, String) =>
+    // NonFatal only: an OOM or interrupt aborts the bench; a query that
+    // merely failed keeps its -1 sentinel and says why on stderr
+    def failed(what: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
+    def once(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
+      try { fn(spark, sfDir).count() } catch {
+        case NonFatal(e) => failed(name, e); return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
     // INTERLEAVED passes: the full suite runs twice end-to-end, so the
@@ -43,8 +52,8 @@ object Bench {
     // sign BOTH samples of the same query. Per-query minima across
     // passes; a transient failure in one pass must not mark a query
     // failed if the other pass succeeded.
-    val pass1 = named.map { case (n, fn) => n -> once(fn) }.toMap
-    val pass2 = named.map { case (n, fn) => n -> once(fn) }.toMap
+    val pass1 = named.map { case (n, fn) => n -> once(n, fn) }.toMap
+    val pass2 = named.map { case (n, fn) => n -> once(n, fn) }.toMap
     val results = named.map { case (name, fn) =>
       val (a, r) = (pass1(name), pass2(name))
       val b =
@@ -53,7 +62,7 @@ object Bench {
           // residual cross-pass disagreement on a non-trivial query:
           // spend ONE tie-break rep — but a failed rep returns the -1
           // sentinel, which must not demote two good samples to "failed"
-          val c = once(fn)
+          val c = once(name, fn)
           if (c < 0) math.min(a, r) else math.min(math.min(a, r), c)
         } else math.min(a, r)
       name -> b
@@ -91,8 +100,8 @@ object Bench {
           s""""q34_lsh_planted_recall":${planted.intersect(lsh).size.toDouble / planted.size}""")
     } catch { // never fail the bench over the quality probe — but a broken
       // probe must be attributable from the run output, not silent
-      case e: Throwable =>
-        System.err.println(s"recall probe failed: $e")
+      case NonFatal(e) =>
+        failed("recall probe", e)
         None
     })
       .map(r => s"{$r}")

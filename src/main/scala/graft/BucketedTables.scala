@@ -145,7 +145,7 @@ object BucketedTables {
     * iterative graph family (q51/q78/q79/q82/q52 and their verify
     * companions). Two r19 findings drive it (guide §2.4/§6):
     *   - a `localCheckpoint` edge pin reports UnknownPartitioning under
-    *     AQE (ProbeCkpt), so at any scale where the edge side is not
+    *     AQE (OPTIMIZATION_r19.md), so at any scale where the edge side is not
     *     broadcast the per-iteration contribs join RE-SHUFFLES it —
     *     ×10 iterations for PageRank, ×8 for HITS. Bucketed by the join
     *     key, the edge side arrives exchange-free AND pre-sorted in

@@ -392,7 +392,7 @@ object Pipeline {
 
   private def foldSegmentsLeased(spark: SparkSession, outDir: String,
       maintainRanks: Boolean, rankTol: Double, rankMaxIters: Int,
-      beforeCommit: () => Unit = () => ()): FoldStats = {
+      beforeCommit: () => Unit): FoldStats = {
     val completed = SegmentManifest.completedSegments(spark, outDir)
     val linksLedger = foldedSegments(spark, s"$outDir/links")
     val pagesLedger = foldedSegments(spark, s"$outDir/pages")

@@ -55,6 +55,7 @@ final class LinkApiServer(
     // context.WithTimeout -> "Query timeout"); without it a
     // pathological store read holds an HTTP worker thread forever
     queryBudgetMs: Long = 61000) {
+  import LinkApiServer.{DomainInvalid, DomainMissing, DomainOk, DomainUnparseable, domainOf}
 
   // isRateLimited (controller.go:282-307): fixed window anchored at the
   // first request, counter reset when the window expires
@@ -437,6 +438,9 @@ final class LinkApiServer(
           onStale()
           Thread.sleep(math.min(25L * attempt, 400L))
         case e: Exception if unknown < unknownAttempts &&
+            // a stale-store failure that exhausted its own budget above
+            // (a missing root past missingRootAttempts) is not unknown
+            !isStaleStore(e) &&
             // never swallow the deadline's interrupt (or an interrupted
             // Spark await wrapping it) — that is the 504 path
             !causeChainText(e).contains("InterruptedException") &&
@@ -487,36 +491,6 @@ final class LinkApiServer(
       .takeWhile(_ != null).take(10)
       .map(t => t.getClass.getName + ": " + String.valueOf(t.getMessage))
       .mkString("\n")
-
-  private sealed trait DomainResult
-  private case object DomainMissing extends DomainResult
-  private case object DomainUnparseable extends DomainResult
-  private case object DomainInvalid extends DomainResult
-  private final case class DomainOk(domain: String) extends DomainResult
-
-  /** Accepts `domain.com` and `http(s)://domain.com/...` (handler.go:
-    * 45-58), then applies the IsValidDomain grammar (wat.go:613).
-    *
-    * Divergence (documented): the reference URL-parses any domain
-    * merely STARTING with "http", which rejects valid bare domains
-    * like `httpbin.org` (url.Parse gives an empty host). We only
-    * treat values with an explicit scheme as URLs — the evident
-    * intent of the "accepts http://domain.com and domain.com" comment.
-    */
-  private def domainOf(j: JValue): DomainResult = j \ "domain" match {
-    case JString(raw) if raw.nonEmpty =>
-      val host =
-        if (!raw.startsWith("http://") && !raw.startsWith("https://")) Some(raw)
-        else
-          try Option(java.net.URI.create(raw).getHost)
-          catch { case _: Exception => None }
-      host match {
-        case None => DomainUnparseable
-        case Some(h) if h.toLowerCase.matches(UrlFns.DomainRegex) => DomainOk(h)
-        case Some(_) => DomainInvalid
-      }
-    case _ => DomainMissing
-  }
 
   private def request(j: JValue, domain: String): LinkDbRequest = {
     def str(v: JValue): Option[String] = v match {
@@ -598,4 +572,34 @@ object LinkApiServer {
     * "Query timeout", controller.go:104) — mapped to 504 in `safely`.
     */
   final class QueryTimeout extends RuntimeException("Query timeout")
+
+  private sealed trait DomainResult
+  private case object DomainMissing extends DomainResult
+  private case object DomainUnparseable extends DomainResult
+  private case object DomainInvalid extends DomainResult
+  private final case class DomainOk(domain: String) extends DomainResult
+
+  /** Accepts `domain.com` and `http(s)://domain.com/...` (handler.go:
+    * 45-58), then applies the IsValidDomain grammar (wat.go:613).
+    *
+    * Divergence (documented): the reference URL-parses any domain
+    * merely STARTING with "http", which rejects valid bare domains
+    * like `httpbin.org` (url.Parse gives an empty host). We only
+    * treat values with an explicit scheme as URLs — the evident
+    * intent of the "accepts http://domain.com and domain.com" comment.
+    */
+  private def domainOf(j: JValue): DomainResult = j \ "domain" match {
+    case JString(raw) if raw.nonEmpty =>
+      val host =
+        if (!raw.startsWith("http://") && !raw.startsWith("https://")) Some(raw)
+        else
+          try Option(java.net.URI.create(raw).getHost)
+          catch { case _: Exception => None }
+      host match {
+        case None => DomainUnparseable
+        case Some(h) if h.toLowerCase.matches(UrlFns.DomainRegex) => DomainOk(h)
+        case Some(_) => DomainInvalid
+      }
+    case _ => DomainMissing
+  }
 }

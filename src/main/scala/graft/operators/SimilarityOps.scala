@@ -149,7 +149,7 @@ object SimilarityOps {
   }
 
   /** COUNT-SKETCH SCREEN (r16): the banded candidate mass sits at
-    * J 0.5-0.7 (ProbeQ30b: 93% of sf1's 707k candidates; 142:1
+    * J 0.5-0.7 (SURVEY.md R16a: 93% of sf1's 707k candidates; 142:1
     * candidate:pair at sf100) and each survivor ships text + pays a
     * per-pair shingle recompute in the verify stage. The 132-byte
     * jaccard_sketch upper-bounds |A ∩ B| per pair (per-bucket min
@@ -559,7 +559,7 @@ object SimilarityOps {
             ivfFitCache.computeIfAbsent((dir, k), _ => fitIvfK(embSampleFor(s, dir), k))
           val e = Tables.embeddings(s, dir)
           val fine0 = fitFineLevelFrame(s, e, coarse)
-          val den = calibrateProbeDen(s, e, coarse.copy(fine = Some(fine0)))
+          val den = calibrateProbeDen(e, coarse.copy(fine = Some(fine0)))
           val fitted = coarse.copy(fine = Some(fine0.copy(probeDen = den)))
           AnnIndexStore.publish(s, dir, fp, fitted, pqFitFor(s, dir))
           fitted
@@ -729,10 +729,14 @@ object SimilarityOps {
     * hit the exact answer before a cheaper fraction is accepted — an
     * ~8-point margin over the gate's 0.9 so a different query draw
     * cannot straddle the gate. On the isotropic testdata the curve
-    * reads 0.84 at 1/4 (ProbeAnn), so every rung fails and the law
+    * reads 0.84 at 1/4 (TRIALS_r18.json), so every rung fails and the law
     * stays 1/2; on the clustered control the first rung passes.
     */
   private val CalibBar = 0.98
+
+  /** Spec handle for [[calibrateProbeDen]]. */
+  private[graft] def probeCalibrate(e: org.apache.spark.sql.DataFrame, idx: IvfIndex): Int =
+    calibrateProbeDen(e, idx)
 
   /** Fit-time probe-fraction calibration (r18): the needed fraction is
     * a property of the DATA — measured 1/2 on the isotropic testdata
@@ -751,13 +755,7 @@ object SimilarityOps {
     * itself; everything is deterministic (id-ordered draws, quantized
     * integer scoring).
     */
-  /** Spec/probe handle for [[calibrateProbeDen]]. */
-  private[graft] def probeCalibrate(s: org.apache.spark.sql.SparkSession,
-      e: org.apache.spark.sql.DataFrame, idx: IvfIndex): Int =
-    calibrateProbeDen(s, e, idx)
-
-  private def calibrateProbeDen(s: org.apache.spark.sql.SparkSession,
-      e: org.apache.spark.sql.DataFrame, idx: IvfIndex): Int = {
+  private def calibrateProbeDen(e: org.apache.spark.sql.DataFrame, idx: IvfIndex): Int = {
     val f = idx.fine.get
     // two DISJOINT deterministic draws (r19): the rung is chosen on
     // the primary draw exactly as in r18 (the first CalibQueries ids ≥
@@ -883,7 +881,7 @@ object SimilarityOps {
       math.abs(sUnion.getOrElse(c, 0.0) - sBase.getOrElse(c, 0.0)) * 1e6
     }.foldLeft(0.0)(math.max).toLong
     val shiftCapPpm = math.max(1L, (1e6 / (2.0 * idx.searchCells)).toLong)
-    val recallPct = idx.fine.map(f => holdoutRecallPct(s, union, idx, f)).getOrElse(100)
+    val recallPct = idx.fine.map(f => holdoutRecallPct(union, idx, f)).getOrElse(100)
     val refitDue = if (recallPct < 90 || shiftPpm > shiftCapPpm) 1L else 0L
     s.createDataFrame(Seq((nBase, nUnion - nBase, shiftPpm, shiftCapPpm,
         recallPct.toLong, refitDue)))
@@ -895,8 +893,8 @@ object SimilarityOps {
     * calibrated probe count, over an arbitrary corpus frame — the
     * fit-free re-check [[deltaDriftGauge]] runs per segment import.
     */
-  private def holdoutRecallPct(s: org.apache.spark.sql.SparkSession,
-      e: org.apache.spark.sql.DataFrame, idx: IvfIndex, f: FineLevel): Int = {
+  private def holdoutRecallPct(e: org.apache.spark.sql.DataFrame, idx: IvfIndex,
+      f: FineLevel): Int = {
     val ids = e.filter(col("vec_id") >= 1000).orderBy(col("vec_id"))
       .limit(CalibQueries * 2)
       .select(col("vec_id")).collect().map(_.getLong(0))
@@ -1020,20 +1018,9 @@ object SimilarityOps {
   : org.apache.spark.sql.DataFrame =
     lshPairsFromBuckets(lshBucketAgg(s, dir))
 
-  // dev-probe handles (tools.ProbeQ83) — not part of the query surface
-  private[graft] def probeLshBucketAgg(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = lshBucketAgg(s, dir)
-  private[graft] def probeLshPairs(b: org.apache.spark.sql.DataFrame)
-  : org.apache.spark.sql.DataFrame = lshPairsFromBuckets(b)
-  private[graft] def probeLshPressure(b: org.apache.spark.sql.DataFrame)
-  : org.apache.spark.sql.DataFrame = lshPressure(b)
-
-  // dev-probe handles (tools.ProbeAnn) — fine-IVF recall/cost curves
+  // test/ClusterRehearsal handles for the cross-session IVF index
   private[graft] def probeIvfFit(s: org.apache.spark.sql.SparkSession,
       dir: String): IvfIndex = ivfFitFor(s, dir)
-  private[graft] def probeTopK(e: org.apache.spark.sql.DataFrame,
-      cand: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    quantizedTopK(e, cand)
   /** q40's candidate frame with an EXPLICIT probe count (recall-curve
     * sweeps); `probes <= 0` means the production law.
     */
@@ -1373,12 +1360,6 @@ object SimilarityOps {
     IvfIndex(cents, cents.map(c => math.sqrt(c.map(x => x * x).sum)))
   }
 
-  /** Corpus-scaled ANN index fit over a frame (specs): cells from the
-    * frame's own count. Production paths use the dir-memoized count.
-    */
-  private[graft] def fitIvf(e: org.apache.spark.sql.DataFrame): IvfIndex =
-    fitIvfK(embSample(e), ivfCellsFor(e.count()))
-
   /** SemDeDup cluster count: |cluster| ≈ 512 keeps the within-cluster
     * quadratic FLAT as the corpus grows (the Abbas et al. k ∝ n
     * posture — a fixed 16 cells would make clusters n/16 and the pair
@@ -1445,7 +1426,7 @@ object SimilarityOps {
     * exploded frame is ~1024 instead of ~512, so pair mass ≈ 4× the
     * single-probe bill instead of ≈ 2× — still linear in n, paid only
     * past the ~262k-vector engagement threshold. Measured on the
-    * planted cos≈1 pattern at sf100 (ProbeSem, TRIALS_r18):
+    * planted cos≈1 pattern at sf100 (TRIALS_r18.json):
     * single-probe assignment agreement is already 99.7% — the r17
     * "43% recall" note traced to a denominator artifact, not
     * assignment loss — and multi-probe lifts shared-cluster coverage
@@ -1489,8 +1470,8 @@ object SimilarityOps {
   }
 
   /** Fine-regime probe count, with the probe-fraction math re-derived
-    * against measurement (ProbeAnn at sf100, n=2M, 4030 fine cells —
-    * TRIALS_r18):
+    * against measurement (sf100, n=2M, 4030 fine cells —
+    * TRIALS_r18.json):
     *
     *   - candidate mass is now EXACTLY proportional to probes
     *     (152k/310k/622k/1.25M/2.5M/5.0M candidates per query at
@@ -1651,8 +1632,8 @@ object SimilarityOps {
     }
   )
 
-  /** The q41 core over any (link_domain, link_text) frame — also driven
-    * at 10x domain count by graft.ScaleRehearsal.
+  /** The q41 core over any (link_domain, link_text) frame — also
+    * rehearsed at 10x domain count (SURVEY.md §5).
     */
   private[graft] def sketchPairs(links: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // sketches feed the band explode AND both pair sides: materialize
@@ -1667,7 +1648,7 @@ object SimilarityOps {
     // it would take TWO colliding domains in one band bucket to emit a
     // wrong pair) is the same modeled risk every hash-keyed family
     // member documents.
-    // distinct-first (r17, ProbeQ41): MinHash is SET semantics — min
+    // distinct-first (r17, TRIALS_r17.json): MinHash is SET semantics — min
     // over duplicate elements is idempotent — so the aggregate runs
     // over DISTINCT (domain, text) pairs (exactly the oracle's
     // spelling) and the per-element md5 + 48 Carter-Wegman perms run
@@ -1745,7 +1726,7 @@ object SimilarityOps {
     * caller's batch-id convention guarantees it). Exposed so the
     * scale rehearsal can drive a 10× corpus against a small delta.
     */
-  private[graft] def deltaDedupPairs(base: org.apache.spark.sql.DataFrame,
+  private def deltaDedupPairs(base: org.apache.spark.sql.DataFrame,
       delta: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     def chunked(df: org.apache.spark.sql.DataFrame, id: String, sig: String) =
       df.select(col("doc_id").as(id),
@@ -2098,7 +2079,7 @@ object SimilarityOps {
     * of q73; the plan is unchanged). The verify companion dumps this
     * frame's id pairs for its oracle.
     */
-  private[graft] def pqShortlist(s: org.apache.spark.sql.SparkSession, dir: String)
+  private def pqShortlist(s: org.apache.spark.sql.SparkSession, dir: String)
   : org.apache.spark.sql.DataFrame = {
     val e = Tables.embeddings(s, dir)
     // dir-memoized fits: q73/q83 share the sample, IVF and PQ fits
@@ -2242,14 +2223,14 @@ object SimilarityOps {
         // the LSH bucket frame is shared by the pairs dump AND the
         // cap-pressure dump. r17 PERSISTED it and materialized the
         // cache via the pressure rollup BEFORE forking, claiming "wall
-        // unchanged vs r16" — ProbeQ83 (TRIALS_r18) measured that
+        // unchanged vs r16" — the r18 decomposition (TRIALS_r18.json) measured that
         // claim false and attributed the r17 verdict's +1.9-2.9s
         // every-SF regression: at sf0.1 the persist-materialize costs
         // ~1.2s where the plain fold costs ~0.3s (cache serialization
         // of the ids arrays), reading pairs back from the cache is
         // SLOWER than re-running the codegen'd fold (~0.75s vs
         // ~0.45s), and the whole prefix sat sequentially ahead of the
-        // concurrent region. Measured end-to-end (TimeOne, warm): the
+        // concurrent region. Measured end-to-end (warm, SURVEY.md R18a): the
         // no-persist respelling reads 2.5-3.4s vs 4.4s at sf0.1 and
         // 9.6-10s vs 13-14s at sf10 — so the DEFAULT is now to fold
         // twice (pressure job + pairs job, chained in one future that
@@ -2267,9 +2248,9 @@ object SimilarityOps {
         // frame CONSTRUCTION stays inside the futures (r19: hoisting it
         // to this thread serialized the IVF probe-calibration jobs that
         // ivfCandidates' first build runs ahead of the whole concurrent
-        // region — TimeOne sf10 read ~+1.5s for it); the typed futures
-        // hand the dumped frames back out so the gate's read-backs can
-        // reuse their schemas (Tables.readBack)
+        // region — sf10 read ~+1.5s for it, OPTIMIZATION_r19.md); the
+        // typed futures hand the dumped frames back out so the gate's
+        // read-backs can reuse their schemas (Tables.readBack)
         def dumped(mk: => org.apache.spark.sql.DataFrame, path: String)
             : Future[org.apache.spark.sql.DataFrame] =
           Future {

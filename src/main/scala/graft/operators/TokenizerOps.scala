@@ -90,7 +90,7 @@ object TokenizerOps {
     * count-desc/l/r UTF8-binary tie-break — TokenizerSpec pins the
     * sequence, q71_verify hash-gates it cross-engine).
     */
-  private[graft] def bpeFit(docs: DataFrame, k: Int): Seq[(Int, String, String, Long)] = {
+  private def bpeFit(docs: DataFrame, k: Int): Seq[(Int, String, String, Long)] = {
     import org.apache.spark.sql.Observation
     def fused(df: DataFrame): (DataFrame, Option[(String, String, Long)]) = {
       val obs = Observation()

@@ -38,7 +38,7 @@ object RewriteRankFilterToTopK extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case p @ Project(projectList,
-        Filter(cond, w @ Window(
+        Filter(cond, Window(
           Seq(alias @ Alias(WindowExpression(RowNumber(), spec), _)),
           partitionSpec, orderSpec, child, _)))
         if partitionSpec.nonEmpty && // global top-k would need

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** Generate a CLUSTERED synthetic embeddings table (dev tool) — the
   * counterpart to the isotropic testdata, for measuring how the
-  * two-level IVF serves clustered real-world-shaped data (ProbeAnn's
-  * recall/fraction curve on it backs the R18b scaladoc claim).
+  * two-level IVF serves clustered real-world-shaped data (its
+  * recall/fraction curve, SURVEY.md R18g, backs the R18b scaladoc claim).
   * 10k cluster centers (hash noise), 100 members each (center + 5%
   * member noise), round-robin cluster ids so the id-ordered kmeans
   * sample covers all clusters.

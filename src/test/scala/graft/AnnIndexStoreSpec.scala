@@ -100,7 +100,7 @@ class AnnIndexStoreSpec extends SparkSpec {
       val coarse = SimilarityOps.fitIvfK(
         SimilarityOps.embSample(base), SimilarityOps.ivfCellsFor(nBase))
       val fine = SimilarityOps.fitFineLevelFrame(spark, base, coarse)
-      val den = SimilarityOps.probeCalibrate(spark, base, coarse.copy(fine = Some(fine)))
+      val den = SimilarityOps.probeCalibrate(base, coarse.copy(fine = Some(fine)))
       val idx = coarse.copy(fine = Some(fine.copy(probeDen = den)))
 
       // the production delta path: assign + gauge, NO refit

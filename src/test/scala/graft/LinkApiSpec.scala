@@ -466,6 +466,24 @@ class LinkApiSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("a missing store root stops at its own retry budget, not the unknown one") {
+    // a vanished path OUTSIDE the generation protocol: the stale branch
+    // grants missingRootAttempts (2) and the unknown-failure branch must
+    // not add its rebind-and-sleep retries on top
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val missing: String => LinkDb = { _ =>
+      calls.incrementAndGet()
+      throw new RuntimeException(
+        "[PATH_NOT_FOUND] Path does not exist: file:/nonexistent/store/links")
+    }
+    val srv = new LinkApiServer(missing, port = 0).start()
+    try {
+      val resp = post(srv.boundPort, """{"domain":"d3.com","limit":5}""")
+      assert(resp.statusCode() == 500, resp.body())
+      assert(calls.get() == 2, s"attempts=${calls.get()}")
+    } finally srv.stop()
+  }
+
   test("a store read inside the budget is unaffected by the deadline") {
     val srv = new LinkApiServer(_ => db, port = 0, queryBudgetMs = 61000).start()
     try {

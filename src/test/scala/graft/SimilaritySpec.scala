@@ -533,7 +533,7 @@ class SimilaritySpec extends SparkSpec {
     val coarse = SimilarityOps.fitIvfK(
       SimilarityOps.embSample(e), SimilarityOps.ivfCellsFor(n))
     val fine = SimilarityOps.fitFineLevelFrame(spark, e, coarse)
-    val den = SimilarityOps.probeCalibrate(spark, e, coarse.copy(fine = Some(fine)))
+    val den = SimilarityOps.probeCalibrate(e, coarse.copy(fine = Some(fine)))
     // since r19 a den this cheap means the DISJOINT hold-out draw also
     // cleared the bar at the chosen rung — one lucky 16-query draw can
     // no longer pin the production probe fraction
@@ -543,7 +543,7 @@ class SimilaritySpec extends SparkSpec {
       "calibrated probes must undercut the worst-case law")
     // and the whole calibration is deterministic: a second run over the
     // same corpus lands on the same rung
-    assert(SimilarityOps.probeCalibrate(spark, e, coarse.copy(fine = Some(fine))) == den,
+    assert(SimilarityOps.probeCalibrate(e, coarse.copy(fine = Some(fine))) == den,
       "calibration must be deterministic across runs")
   }
 
